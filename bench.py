@@ -121,6 +121,7 @@ sec_isolated when present, sec otherwise.
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import sys
@@ -682,6 +683,19 @@ def _isolated_rerun(movers: list[str], sf_dir: str) -> dict[str, float]:
     return _subset_rerun(movers, sf_dir, timeout=1800)
 
 
+def ab_suspects(effective: dict[str, float], prev: dict[str, float]) -> list[str]:
+    """Rows the A/B mover audit re-measures: HEADLINE rows that take at
+    least 1 s and more than 1.5x their previous value, worst ratio first
+    (HEADLINE order breaks ties), at most 12 of them to bound the audit
+    cost."""
+    movers = [
+        n for n in HEADLINE
+        if n in prev and effective[n] >= 1.0 and effective[n] > 1.5 * prev[n]
+    ]
+    movers.sort(key=lambda n: effective[n] / prev[n] if prev[n] else math.inf, reverse=True)
+    return movers[:12]
+
+
 def build_summary_line(
     per_query: dict[str, float],
     total: float,
@@ -946,8 +960,9 @@ def main() -> None:
     }
 
     # MECHANIZED MOVER AUDIT (round 14, VERDICT r13 item #7): with
-    # SPARK_GRAFT_AB_BASE=<commit> set, any row that moved >1.5x vs the
-    # previous committed detail (and clears the 1 s floor) is arbitrated
+    # SPARK_GRAFT_AB_BASE=<commit> set, the rows that moved >1.5x vs the
+    # previous committed detail (and clear the 1 s floor), at most 12 and
+    # worst first (ab_suspects), are arbitrated
     # by the interleaved A/B control (tools/ab_bench.py) against that
     # checkout, and the per-query verdicts ship in the detail document —
     # the "is it code or the box?" answer becomes a committed artifact
@@ -955,10 +970,7 @@ def main() -> None:
     # per audited row.
     ab_base = os.environ.get("SPARK_GRAFT_AB_BASE", "").strip()
     if ab_base:
-        suspects = [
-            n for n in HEADLINE
-            if n in prev and effective[n] >= 1.0 and effective[n] > 1.5 * prev[n]
-        ][:12]  # bound the audit cost; worst movers first in HEADLINE order
+        suspects = ab_suspects(effective, prev)
         if suspects:
             import subprocess
 

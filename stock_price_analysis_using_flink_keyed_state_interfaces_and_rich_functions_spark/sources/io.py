@@ -18,7 +18,9 @@ for reference parity only — columnar formats are the real input path.
 from __future__ import annotations
 
 import os
+import weakref
 from collections.abc import Sequence
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,6 +127,9 @@ def parse_quotes_lines(lines: DataFrame) -> DataFrame:
     return lines.filter(~F.col("value").contains("Date")).select(*casts, *keep)
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 # Session-scoped parquet SCHEMA cache (optimization round 14, VERDICT
 # r13 item #6). Schema inference on every `spark.read.parquet(path)`
 # fires a footer-reading driver job (~60 ms plan-time + ~250 ms by
@@ -141,19 +146,23 @@ def parse_quotes_lines(lines: DataFrame) -> DataFrame:
 # manifest) instead of re-inferring per query. First use still infers
 # from the actual footer (ground truth — declared TABLE_SCHEMAS are
 # NOT trusted blindly, so schema drift in the files is still caught
-# once per session). Keyed by the live session object (holds the
-# handful of per-process sessions, never data) + absolute path; the
-# cache dies with the process. Tables are immutable for a session's
-# lifetime — mutate-in-place workflows must not use this path.
-_SCHEMA_CACHE: dict = {}
+# once per session). Keyed weakly by the session, so a session nobody
+# references any more takes its entries with it, then by absolute path,
+# so every spelling of one local table shares one entry (the read uses
+# that absolute path too; URIs are kept as given). Tables are immutable
+# for a session's lifetime — mutate-in-place workflows must not use
+# this path.
+_SCHEMA_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark, path)
-    schema = _SCHEMA_CACHE.get(key)
+    if not urlsplit(path).scheme:
+        path = os.path.abspath(path)
+    schemas = _SCHEMA_CACHE.setdefault(spark, {})
+    schema = schemas.get(path)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        schemas[path] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
 
@@ -169,17 +178,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reader does, so both engines see identical microsecond timestamps.
     """
     if name == "events":
-        # NOTE: read_events sets spark.sql.legacy.parquet.nanosAsLong for
-        # the session (it must hold at scan EXECUTION, so a set-restore
-        # around the lazy read would be a race); later third-party
-        # TIMESTAMP(NANOS) parquet reads will surface raw longs instead
-        # of erroring — route them through read_events too.
         return read_events(spark, os.path.join(sf_dir, "events.parquet"))
     return _parquet_cached_schema(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # spark.sql.legacy.parquet.nanosAsLong must hold at scan EXECUTION, so
+    # a set-restore around the lazy read would be a race. Engine sessions
+    # set it when they are built (session.get_spark); any other session
+    # gets it here, once. Either way later third-party TIMESTAMP(NANOS)
+    # parquet reads surface raw longs instead of erroring — route them
+    # through read_events too.
+    if spark.conf.get(_NANOS_AS_LONG, "false") != "true":
+        spark.conf.set(_NANOS_AS_LONG, "true")
     df = _parquet_cached_schema(spark, path)
     from pyspark.sql.types import LongType
 

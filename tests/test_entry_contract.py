@@ -222,6 +222,32 @@ def test_bench_summary_line_always_fits_the_driver_tail():
     assert p3["parallelism"] == 32 and p3["master"] == "local[32]"
 
 
+def test_bench_ab_suspects_are_worst_ratio_first_then_capped():
+    """The A/B mover audit re-measures the worst movers: rows at least
+    1 s and >1.5x their previous value, sorted by that ratio (HEADLINE
+    order breaks ties) BEFORE the cap, so a 10x mover late in the
+    headline is never cut for a 1.6x one early in it."""
+    import bench
+
+    names = list(bench.HEADLINE[:20])
+    prev = {n: 1.0 for n in names}
+    effective = {n: 1.6 for n in names}  # 20 mild movers in headline order
+    effective[names[0]] = 1.2             # not a mover (<= 1.5x)
+    effective[names[1]] = 0.9             # under the 1 s floor
+    effective[names[19]] = 10.0           # the worst, last in the headline
+    effective[names[15]] = 4.0
+    prev[names[15]] = 2.0                 # 2x
+    del prev[names[18]]                   # no previous value: never a suspect
+    effective[names[17]] = 3.0
+    prev[names[17]] = 0.0                 # previously free: ranks first
+    got = bench.ab_suspects(effective, prev)
+    assert got[:3] == [names[17], names[19], names[15]]
+    assert got[3:] == names[2:11]  # ties keep headline order
+    assert len(got) == 12
+    flat = {n: 1.0 for n in names}
+    assert bench.ab_suspects(flat, flat) == []
+
+
 def test_copurchase_pair_supplier_memoizes_per_session(spark):
     """The session-scoped co-purchase pair supplier (r7 verdict item 4):
     repeated calls in one session return the SAME materialized frame

@@ -1,5 +1,5 @@
-"""Session factory: the Python worker daemon of engine sessions and the
-knobs ``session.py`` reads."""
+"""Session factory: the Python worker daemon and the checkpoint file manager
+of engine sessions, and the knobs ``session.py`` reads."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ import zipfile
 import zipimport
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from stock_price_analysis_using_flink_keyed_state_interfaces_and_rich_functions_spark import session
 
@@ -56,20 +57,59 @@ spark.stop()
 '''
 
 
+# Builds three engine sessions one after another in a fresh interpreter: one
+# with no caller value, one with a caller value in extra_conf and one with it
+# in SPARK_GRAFT_CONF. For each it reports the session's value and the class
+# of the checkpoint manager Spark builds from the session's Hadoop conf.
+CONF_DRIVER = r'''
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from stock_price_analysis_using_flink_keyed_state_interfaces_and_rich_functions_spark.session import get_spark
+
+KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FC = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+out = {}
+for label, extra, env in (("default", {}, ""), ("extra_conf", {KEY: FC}, ""), ("env", {}, f"{KEY}={FC}")):
+    os.environ["SPARK_GRAFT_CONF"] = env
+    spark = get_spark("conf-probe", master="local[1]", extra_conf={"spark.ui.showConsoleProgress": "false", **extra})
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(sys.argv[2]), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    out[label] = [spark.conf.get(KEY, None), manager.getClass().getName()]
+    spark.stop()
+print("RESULT " + json.dumps(out))
+'''
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+FC_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+)
+
+
+def _subprocess_env():
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_GRAFT_CONF")}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    return env
+
+
+def _result(proc):
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    return json.loads(lines[-1][len("RESULT "):])
+
+
 @pytest.fixture(scope="module")
 def foreign_cwd_run(tmp_path_factory):
     cwd = tmp_path_factory.mktemp("foreign-cwd")
     caller = tmp_path_factory.mktemp("caller-path")
     (caller / "graft_caller_marker.py").write_text("")
-    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_GRAFT_CONF")}
-    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     proc = subprocess.run(
         [sys.executable, "-c", DRIVER, REPO, str(caller)],
-        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
+        cwd=cwd, env=_subprocess_env(), capture_output=True, text=True, timeout=600,
     )
-    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
-    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
-    return json.loads(lines[-1][len("RESULT "):]), str(caller)
+    return _result(proc), str(caller)
 
 
 def test_udf_workers_from_a_foreign_cwd_run_the_engine_daemon(foreign_cwd_run):
@@ -156,3 +196,49 @@ def test_stream_drain_session_scopes_a_valid_partition_count(spark):
         spark.conf.unset(key)
     assert child.conf.get("spark.sql.shuffle.partitions") == "3"
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def _write_atomic(manager, path, data, overwrite):
+    stream = manager.createAtomic(path, overwrite)
+    stream.write(bytearray(data))
+    stream.close()
+
+
+def test_engine_session_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hadoop_conf
+    )
+    assert manager.getClass().getName() == FS_CHECKPOINT_MANAGER
+    target = tmp_path / "0"
+    path = jvm.org.apache.hadoop.fs.Path(str(target))
+    _write_atomic(manager, path, b"first", overwrite=False)
+    assert target.read_bytes() == b"first"
+    assert (tmp_path / ".0.crc").exists()  # still a checksummed filesystem
+
+    # an offset or commit log entry never replaces an existing one
+    with pytest.raises(Py4JJavaError) as raised:
+        _write_atomic(manager, path, b"second", overwrite=False)
+    exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(raised.value.java_exception)
+    assert target.read_bytes() == b"first"
+
+    # overwriteIfPossible is best effort and never raises. Hive's
+    # ProxyLocalFileSystem, which serves file: when the Hive jars are on the
+    # classpath, refuses to rename onto an existing file, so it is kept.
+    _write_atomic(manager, path, b"third", overwrite=True)
+    filesystem = path.getFileSystem(hadoop_conf).getClass().getName()
+    kept = filesystem == "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem"
+    assert target.read_bytes() == (b"first" if kept else b"third")
+
+
+def test_caller_checkpoint_manager_wins_over_the_engine_default(tmp_path):
+    proc = subprocess.run(
+        [sys.executable, "-c", CONF_DRIVER, REPO, str(tmp_path)],
+        cwd=tmp_path, env=_subprocess_env(), capture_output=True, text=True, timeout=600,
+    )
+    result = _result(proc)
+    assert result["default"] == [FS_CHECKPOINT_MANAGER] * 2
+    assert result["extra_conf"] == [FC_CHECKPOINT_MANAGER] * 2
+    assert result["env"] == [FC_CHECKPOINT_MANAGER] * 2

@@ -3,8 +3,10 @@ sinks, rate source) and the UDF/pandas-UDF/UDTF registration surface."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
+import weakref
 
 import pandas as pd
 import pytest
@@ -22,6 +24,7 @@ from stock_price_analysis_using_flink_keyed_state_interfaces_and_rich_functions_
     register_python_udf,
     register_tokens_udtf,
 )
+from tests.conftest import SF_DIR
 
 
 def test_read_json_with_schema(spark, tmp_path):
@@ -416,15 +419,18 @@ def test_zorder_key_preserves_2d_locality(spark):
 def test_read_table_schema_cache_metadata_only(spark):
     """The session-scoped schema cache returns identical schemas AND
     identical data on cached re-reads (metadata-only: every byte still
-    comes from the files), and keys per (session, path)."""
+    comes from the files), keys per (session, absolute path), and holds
+    its sessions weakly."""
     from stock_price_analysis_using_flink_keyed_state_interfaces_and_rich_functions_spark.sources import io as io_mod
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_DIR
+    nation = os.path.join(os.path.abspath(sf), "nation.parquet")
     io_mod._SCHEMA_CACHE.clear()
     first = io_mod.read_table(spark, sf, "nation")
-    key = (spark, os.path.join(sf, "nation.parquet"))
-    assert key in io_mod._SCHEMA_CACHE  # populated by the inferring read
-    second = io_mod.read_table(spark, sf, "nation")
+    assert io_mod._SCHEMA_CACHE[spark] == {nation: first.schema}  # populated by the inferring read
+    # a relative spelling of the same table shares the entry
+    second = io_mod.read_table(spark, os.path.relpath(sf), "nation")
+    assert list(io_mod._SCHEMA_CACHE[spark]) == [nation]
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(first.collect())
     # events goes through the nanos path and still caches its source schema
@@ -432,3 +438,46 @@ def test_read_table_schema_cache_metadata_only(spark):
     ev2 = io_mod.read_table(spark, sf, "events")
     assert ev2.schema == ev1.schema
     assert ev1.count() == ev2.count() > 0
+
+    # a session nobody references any more releases its entries
+    child = spark.newSession()
+    assert io_mod.read_table(child, sf, "nation").schema == first.schema
+    assert list(io_mod._SCHEMA_CACHE[child]) == [nation]
+    released = weakref.ref(child)
+    del child
+    spark.newSession()  # PySpark's RDD.toDF patch holds the newest session
+    gc.collect()
+    assert released() is None
+    assert list(io_mod._SCHEMA_CACHE.keys()) == [spark]
+
+
+def test_read_events_sets_no_conf_on_an_engine_session(spark, monkeypatch):
+    """Engine sessions carry spark.sql.legacy.parquet.nanosAsLong from
+    get_spark, so an events read writes no session conf."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from stock_price_analysis_using_flink_keyed_state_interfaces_and_rich_functions_spark.sources import io as io_mod
+
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    sets = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: sets.append(k) or real_set(self, k, v))
+    events = io_mod.read_events(spark, os.path.join(SF_DIR, "events.parquet"))
+    assert events.count() > 0
+    assert sets == []
+
+
+def test_read_events_sets_nanos_on_a_session_without_it(spark):
+    """A session without the key (a vanilla driver session) still reads
+    events: read_events sets it once."""
+    from stock_price_analysis_using_flink_keyed_state_interfaces_and_rich_functions_spark.sources import io as io_mod
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    path = os.path.join(SF_DIR, "events.parquet")
+    child = spark.newSession()
+    child.conf.unset(key)
+    assert child.conf.get(key) == "false"
+    events = io_mod.read_events(child, path)
+    assert child.conf.get(key) == "true"
+    assert events.dtypes == io_mod.read_events(spark, path).dtypes
+    assert events.count() > 0
